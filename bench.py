@@ -41,19 +41,23 @@ os.environ["PYTHONPATH"] = (
 )
 
 from sparkstreamingstateful_spark import registry
+from sparkstreamingstateful_spark.compat import ensure_protobuf
 from sparkstreamingstateful_spark.session import get_spark
 
 
 def top_movers(prev: dict, now: dict, k: int = 10) -> dict | None:
     """The <1 KB movers payload (VERDICT r18 item 2): the k largest
     absolute per-key deltas between two per-key timing tables, errored
-    keys (negative timings) excluded on either side. None when no keys
-    are comparable (first run / previous table missing)."""
+    keys (negative timings) excluded on either side and unchanged keys
+    left out. None when no comparable key moved (first run / previous
+    table missing)."""
     common = [
         key for key, t in now.items() if t >= 0 and prev.get(key, -1.0) >= 0
     ]
     movers = sorted(
-        common, key=lambda key: abs(now[key] - prev[key]), reverse=True
+        (key for key in common if now[key] != prev[key]),
+        key=lambda key: abs(now[key] - prev[key]),
+        reverse=True,
     )[:k]
     if not movers:
         return None
@@ -62,6 +66,31 @@ def top_movers(prev: dict, now: dict, k: int = 10) -> dict | None:
         "n_common": len(common),
         "movers": {key: [prev[key], now[key]] for key in movers},
     }
+
+
+def previous_timings() -> dict[str, float]:
+    """The per-key table of the committed bench_full.json (``git show
+    HEAD:``), so every run of a median-of-3 compares against the previous
+    round rather than against the run before it; the working-tree file
+    stands in where git or the commit is unavailable. Empty when neither
+    is readable."""
+    import subprocess
+
+    try:
+        raw = subprocess.run(
+            ["git", "-C", _REPO, "show", "HEAD:bench_full.json"],
+            capture_output=True, check=True, text=True,
+        ).stdout
+    except (OSError, subprocess.CalledProcessError):
+        try:
+            with open(os.path.join(_REPO, "bench_full.json")) as f:
+                raw = f.read()
+        except OSError:
+            return {}
+    try:
+        return json.loads(raw).get("queries", {}) or {}
+    except ValueError:
+        return {}
 
 
 def main() -> None:
@@ -98,17 +127,10 @@ def main() -> None:
         # join_multikey 5.9 s solo vs 98 s in a suite run, identical plan).
         df.write.format("noop").mode("overwrite").save()
 
-    # Previous run's per-key table (for the top_movers line below): read
-    # BEFORE this run overwrites bench_full.json. In the driver's flow the
-    # on-disk file is the committed previous round's median run, so the
-    # deltas are exactly the round-over-round per-query comparison PERF
-    # kept reporting as empty (VERDICT r18 item 2).
-    prev_timings: dict[str, float] = {}
-    try:
-        with open(os.path.join(_REPO, "bench_full.json")) as f:
-            prev_timings = json.load(f).get("queries", {}) or {}
-    except Exception:
-        pass
+    # Previous round's per-key table (for the top_movers line below): read
+    # BEFORE this run overwrites bench_full.json, so the deltas are the
+    # round-over-round per-query comparison (VERDICT r18 item 2).
+    prev_timings = previous_timings()
 
     timings: dict[str, float] = {}
     for key in sorted(queries):
@@ -121,15 +143,6 @@ def main() -> None:
             print(f"# bench error {key}: {exc}", file=sys.stderr)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    try:
-        from sparkstreamingstateful_spark.streaming import queries as sq
-
-        tws_path = sq.TWS_PATH_USED
-    except Exception:
-        # registry.collect() tolerates absent operator modules; neither a
-        # missing streaming module nor any transitive import breakage may
-        # lose the whole bench payload after the suite already ran
-        tws_path = None
 
     # Dict insertion order is deliberate: the driver's BENCH_r* capture
     # keeps only the last 2000 chars of stdout, so with ~290 per-key
@@ -139,10 +152,9 @@ def main() -> None:
     # parsed:null precisely because value sat at the front).
     payload = {
         "queries": timings,
-        # Which stateful API stateful_running_agg_tws actually executed —
-        # the TWS gate is environment-dependent (protobuf health), so each
-        # round's artifact must record which path produced its numbers.
-        "tws_path": tws_path,
+        # Which google.protobuf runtime the transformWithStateInPandas keys
+        # ran on ("native" or "vendored"; see compat.ensure_protobuf).
+        "protobuf_runtime": ensure_protobuf(),
         "metric": "suite_wall_clock",
         "value": total,
         "unit": "sec",

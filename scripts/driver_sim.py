@@ -42,6 +42,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from sparkstreamingstateful_spark.compat import ensure_protobuf
     from tests.conftest import (
         _duck_con,
         assert_engine_type_kinds,
@@ -115,13 +116,7 @@ def main() -> int:
             failures.append(key)
         print(f"[{i + 1}/{len(keys)}] {key}: {status} [{time.time() - t0:.1f}s]", flush=True)
 
-    try:
-        from sparkstreamingstateful_spark.streaming import queries as sq
-
-        tws_path = sq.TWS_PATH_USED
-    except Exception:  # never lose the run summary to a diagnostic lookup
-        tws_path = None
-    print(f"tws_path: {tws_path}", flush=True)
+    print(f"protobuf_runtime: {ensure_protobuf()}", flush=True)
     print(f"total: {time.time() - t_total:.1f}s, failures: {failures}", flush=True)
     return 1 if failures else 0
 

@@ -11,7 +11,9 @@ implementing exactly the surface that generated module uses (see
 ``vendor/google/protobuf/__init__.py``) — is appended to ``sys.path``
 and to ``PYTHONPATH`` so Spark's Python WORKER processes (children of
 the JVM, which inherit the driver's environment in local mode and read
-``spark.executorEnv.PYTHONPATH`` on a cluster) resolve it too.
+``spark.executorEnv.PYTHONPATH`` on a cluster) resolve it too. The TWS
+keys have no other path, so when neither runtime resolves this raises
+instead of letting a different stateful API run in their place.
 
 Call order matters: the PYTHONPATH export must happen BEFORE the JVM
 starts, so ``session.get_spark`` calls this at session build.
@@ -30,9 +32,9 @@ _state: str | None = None
 def ensure_protobuf() -> str:
     """Make ``google.protobuf`` importable; return which runtime won.
 
-    Returns ``"native"`` (real protobuf present), ``"vendored"`` (the
-    minimal runtime from ``vendor/`` was installed on sys.path), or
-    ``"unavailable"`` (vendor tree missing — nothing to do)."""
+    Returns ``"native"`` (real protobuf present) or ``"vendored"`` (the
+    minimal runtime from ``vendor/`` was installed on sys.path). Raises
+    ``RuntimeError`` when neither resolves."""
     global _state
     if _state is not None:
         return _state
@@ -43,23 +45,25 @@ def ensure_protobuf() -> str:
         return _state
     except ImportError:
         pass
-    if not os.path.isdir(os.path.join(VENDOR_DIR, "google", "protobuf")):
-        _state = "unavailable"
-        return _state
-    if VENDOR_DIR not in sys.path:
-        sys.path.append(VENDOR_DIR)  # append: a real install always wins
-    existing = os.environ.get("PYTHONPATH", "")
-    if VENDOR_DIR not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{existing}{os.pathsep}{VENDOR_DIR}" if existing else VENDOR_DIR
-        )
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        _state = "vendored"
-    except ImportError:
-        _state = "unavailable"
-    return _state
+    if os.path.isdir(os.path.join(VENDOR_DIR, "google", "protobuf")):
+        if VENDOR_DIR not in sys.path:
+            sys.path.append(VENDOR_DIR)  # append: a real install always wins
+        existing = os.environ.get("PYTHONPATH", "")
+        if VENDOR_DIR not in existing.split(os.pathsep):
+            os.environ["PYTHONPATH"] = (
+                f"{existing}{os.pathsep}{VENDOR_DIR}" if existing else VENDOR_DIR
+            )
+        try:
+            from google.protobuf import descriptor  # noqa: F401
+        except ImportError:
+            pass
+        else:
+            _state = "vendored"
+            return _state
+    raise RuntimeError(
+        "transformWithStateInPandas needs a google.protobuf runtime: none is "
+        f"installed and none resolved from VENDOR_DIR={VENDOR_DIR}"
+    )
 
 
 def ensure_protobuf_session(spark) -> str:

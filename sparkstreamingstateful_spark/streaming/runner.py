@@ -5,11 +5,14 @@ result table.
 The memory sink is the test/driver surface; production sinks (foreachBatch →
 parquet with exactly-once via checkpoint, console) are exercised in
 tests/test_streaming.py (S5, ST11).
+
+Neither runner sets ``checkpointLocation``: for a memory sink Spark
+creates a temporary checkpoint and deletes it when the query stops
+cleanly, so a run leaves no checkpoint dir behind.
 """
 
 from __future__ import annotations
 
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame
@@ -75,7 +78,6 @@ def run_stream_drain(
             df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ckpt_"))
             .start()
         )
         try:
@@ -142,7 +144,6 @@ def run_stream(
             df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="sss_ckpt_"))
             .trigger(availableNow=True)
             .start()
         )

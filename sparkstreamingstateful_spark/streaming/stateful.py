@@ -19,7 +19,6 @@ wall-clock.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 import pandas as pd
@@ -397,57 +396,6 @@ def make_profile_processor(finalize_ms: int, ttl_ms: int | None = None):
             pass
 
     return ProfileTws()
-
-
-PROFILE_FALLBACK_STATE = T.StructType([T.StructField("profile_json", T.StringType())])
-
-
-def make_profile_fallback_fn(finalize_ms: int):
-    """``applyInPandasWithState`` twin of :func:`make_profile_processor`
-    (insurance for environments where no protobuf runtime resolves — see
-    queries._tws_available): the per-type map rides in one state row as a
-    JSON object ``{type: [n, sum]}`` (the old API has no MapState; JSON
-    because a delimited encoding silently corrupts on a delimiter-bearing
-    event_type — ADVICE r7), the snapshot is emitted by an event-time
-    timeout at the same data-derived ``finalize_ms`` deadline, and a
-    late-arriving group whose deadline the watermark already passed emits
-    inline (setTimeoutTimestamp on a past timestamp kills the query —
-    same guard as sessionize_fn)."""
-
-    def parse(blob: str) -> dict[str, tuple[int, float]]:
-        return {t: (int(n), float(s)) for t, (n, s) in json.loads(blob).items()}
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        def snapshot(cur: dict) -> pd.DataFrame:
-            return pd.DataFrame(
-                [(key[0], t, n, s) for t, (n, s) in cur.items()],
-                columns=["user_id", "event_type", "n", "sum_value"],
-            )
-
-        if state.hasTimedOut:
-            cur = parse(state.get[0])
-            state.remove()
-            yield snapshot(cur)
-            return
-        cur = parse(state.get[0]) if state.exists else {}
-        data = pd.concat(list(pdf_iter), ignore_index=True)
-        for etype, row in data.groupby("event_type")["value"].agg(
-            ["count", "sum"]
-        ).iterrows():
-            n0, s0 = cur.get(etype, (0, 0.0))
-            cur[etype] = (int(n0 + row["count"]), float(s0 + row["sum"]))
-        if finalize_ms <= state.getCurrentWatermarkMs():
-            if state.exists:
-                state.remove()
-            yield snapshot(cur)
-            return
-        # json floats serialize via repr (shortest round-trip) — sums
-        # cross batches bit-exact, same fidelity as the old !r encoding
-        state.update((json.dumps({t: [n, s] for t, (n, s) in cur.items()}),))
-        state.setTimeoutTimestamp(finalize_ms)
-        yield snapshot({})
-
-    return fn
 
 
 def make_sessionize_processor():

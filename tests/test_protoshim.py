@@ -5,9 +5,10 @@ encoding spec (protobuf.dev/programming-guides/encoding) and the state
 protocol's field numbers — NOT produced by the implementation under test,
 so an encoder and decoder that are wrong in the same way cannot pass.
 The end-to-end proof (a real transformWithStateInPandas query whose
-worker speaks this runtime to the JVM state server) lives in
-test_streaming.py::test_tws_path_marker + the stateful_running_agg_tws
-oracle row.
+worker speaks this runtime to the JVM state server) is the
+stateful_running_agg_tws oracle row in test_inventory.py; the TWS keys
+have no other path, and test_streaming.py::test_missing_protobuf_runtime_raises
+pins that a missing runtime raises.
 """
 
 from __future__ import annotations
@@ -256,6 +257,20 @@ def test_nested_repeated_parse_marks_parent_presence():
     # unpacked element appends; pre-fix code overwrote the container
     p.c.MergeFromString(bytes([0x08, 5]))
     assert list(p.c.xs) == [1, 300, 5]
+
+
+def test_copyfrom_self_is_noop(sm):
+    """CopyFrom(self) leaves the message unchanged (the real runtime's
+    contract); clearing before copying would empty it."""
+    msg = sm.StateRequest(
+        stateVariableRequest=sm.StateVariableRequest(
+            valueStateCall=sm.ValueStateCall(stateName="sess", get=sm.Get())
+        )
+    )
+    wire = msg.SerializeToString()
+    msg.CopyFrom(msg)
+    assert msg.SerializeToString() == wire
+    assert msg.stateVariableRequest.valueStateCall.stateName == "sess"
 
 
 def test_copyfrom_matches_wire_roundtrip(sm):

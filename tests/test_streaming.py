@@ -179,19 +179,23 @@ def test_stateful_kill_restart_recovery(spark):
     assert got == want, "recovered final state diverges from the batch twin"
 
 
-def test_tws_path_marker(spark):
-    """The TWS facade must RECORD which stateful API it executed — the gate
-    is environment-dependent, so a green stateful_running_agg_tws row is
-    only interpretable alongside this marker."""
-    from sparkstreamingstateful_spark.streaming import queries as sq
+def test_missing_protobuf_runtime_raises(monkeypatch, tmp_path):
+    """The TWS keys have one stateful path, so when neither a native nor
+    the vendored google.protobuf runtime resolves, ensure_protobuf must
+    raise (naming the vendor dir it searched) rather than report a state
+    a caller could route around."""
+    import sys
 
-    QUERIES["stateful_running_agg_tws"](spark, SF_UNIT)
-    expect = (
-        "transformWithStateInPandas"
-        if sq._tws_available(spark)
-        else "applyInPandasWithState_fallback"
-    )
-    assert sq.TWS_PATH_USED == expect
+    from sparkstreamingstateful_spark import compat
+
+    missing = str(tmp_path / "no_vendor")
+    monkeypatch.setattr(compat, "_state", None)
+    monkeypatch.setitem(sys.modules, "google.protobuf", None)
+    monkeypatch.setitem(sys.modules, "google.protobuf.descriptor", None)
+    monkeypatch.setattr(compat, "VENDOR_DIR", missing)
+    with pytest.raises(RuntimeError, match="VENDOR_DIR") as exc:
+        compat.ensure_protobuf()
+    assert missing in str(exc.value)
 
 
 def test_events_ts_unit_duality(spark, tmp_path):
@@ -1038,11 +1042,6 @@ def test_tws_mapstate_ttl_expiry(spark):
     import time
     import uuid
 
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
-
     feed = chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
     ev = read_stream_events(spark, feed)
     probes = ev.groupBy("user_id").transformWithStateInPandas(
@@ -1117,11 +1116,6 @@ def test_tws_mapstate_no_ttl_retains(spark):
     Poll-then-stop, like the TTL test."""
     import time
     import uuid
-
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
 
     feed = chunked_events_dir(SF_UNIT, n_chunks=2, sentinels=False)
     ev = read_stream_events(spark, feed)
@@ -1275,24 +1269,6 @@ def test_sink_dirs_self_heal_partial(spark, duck):
     assert spark.catalog.tableExists(name)
 
 
-def test_profile_fallback_twin_matches_oracle(spark, duck, monkeypatch):
-    """The applyInPandasWithState fallback of stateful_profile_tws (taken
-    only when no protobuf runtime resolves, so the default suite never
-    executes it) must hash-match the same oracle as the native path. This
-    also pins the JSON map-state encoding (ADVICE r7: the old '|'-joined
-    CSV silently corrupted on delimiter-bearing event types) across a
-    multi-batch merge."""
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    from .conftest import compare
-
-    monkeypatch.setattr(sq, "_tws_available", lambda _s: False)
-    df = QUERIES["stateful_profile_tws"](spark, SF_UNIT)
-    assert sq.TWS_PATHS["stateful_profile_tws"] == "applyInPandasWithState_fallback"
-    _, oracles = registry.collect()
-    compare(df, duck, oracles["stateful_profile_tws"], name="profile_fallback")
-
-
 def test_tws_processing_time_timer(spark, tmp_path):
     """TWS PROCESSING-TIME timers (``timeMode=ProcessingTime`` +
     ``registerTimer(now + Δ)``): armed in the first micro-batch, the
@@ -1307,11 +1283,6 @@ def test_tws_processing_time_timer(spark, tmp_path):
 
     import pandas as pd
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
 
     class PtTimer(StatefulProcessor):
         def init(self, handle):
@@ -1387,11 +1358,7 @@ def test_tws_skew_stress(spark, tmp_path):
     (newly executable in r6): TWS pays a state-server round-trip per KEY
     per batch, so a hot key concentrates pandas work but NOT protocol
     cost — same correctness and sub-linear bound as the twin."""
-    from sparkstreamingstateful_spark.streaming import queries as sq
     from sparkstreamingstateful_spark.streaming import stateful
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
 
     def updates(ev):
         return ev.groupBy("user_id").transformWithStateInPandas(
@@ -1648,10 +1615,6 @@ def test_tws_state_schema_evolution_default_encoding_rejects(spark, tmp_path):
     sibling test.)"""
     from pyspark.sql import types as T
 
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
     import pyarrow.parquet as pq
 
     feed, t, ckpt = _evolution_fixture(tmp_path)
@@ -1683,10 +1646,6 @@ def test_tws_state_schema_evolution_avro_accepts(spark, tmp_path):
     checkpoint property, not a per-run choice."""
     from pyspark.sql import types as T
 
-    from sparkstreamingstateful_spark.streaming import queries as sq
-
-    if not sq._tws_available(spark):
-        pytest.skip("transformWithStateInPandas unavailable (protobuf gate)")
     import pyarrow.parquet as pq
 
     feed, t, ckpt = _evolution_fixture(tmp_path)
