@@ -227,12 +227,13 @@ def _proto_blob_feed(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     from ..streaming.feeder import DEFAULT_CHUNKS
-    from .scans import _dir_tag
+    from .scans import _dir_tag, build_once
 
     out = os.path.join(
         tempfile.gettempdir(), f"sss_protoblobs_{_dir_tag(sf_dir, 'events')}"
     )
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         wire = _load_wire()
         t = pq.read_table(f"{sf_dir}/events.parquet")
         ts = t.column("ts")
@@ -250,7 +251,6 @@ def _proto_blob_feed(sf_dir: str) -> str:
             "ts_us": ts_us,
         }
         n = t.num_rows
-        os.makedirs(out, exist_ok=True)
         base = 1_600_000_000
         for i in range(DEFAULT_CHUNKS):
             lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
@@ -267,9 +267,8 @@ def _proto_blob_feed(sf_dir: str) -> str:
                 path,
             )
             os.utime(path, (base + i, base + i))
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
-    return out
+
+    return build_once(out, build)
 
 
 @query(
@@ -488,12 +487,13 @@ def _avro_layout(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     from ..streaming.feeder import DEFAULT_CHUNKS
-    from .scans import _dir_tag
+    from .scans import _dir_tag, build_once
 
     out = os.path.join(
         tempfile.gettempdir(), f"sss_avro_{_dir_tag(sf_dir, 'events')}"
     )
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         t = pq.read_table(f"{sf_dir}/events.parquet")
         ts = t.column("ts")
         if pa.types.is_integer(ts.type):
@@ -508,16 +508,14 @@ def _avro_layout(sf_dir: str) -> str:
             "ts_us": ts_us,
         }
         n = t.num_rows
-        os.makedirs(out, exist_ok=True)
         for i in range(DEFAULT_CHUNKS):
             lo, hi = i * n // DEFAULT_CHUNKS, (i + 1) * n // DEFAULT_CHUNKS
             chunk = {k: v[lo:hi] for k, v in cols.items()}
             write_avro_container(
                 os.path.join(out, f"{i:04d}.avro"), chunk, hi - lo
             )
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
-    return out
+
+    return build_once(out, build)
 
 
 @query(

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
+from ..session import conf_window
 
 
 @query(
@@ -287,22 +288,21 @@ def _skewed_fact_layout(sf_dir: str) -> str:
     files (8..64 of them), one mapper each."""
     import pyarrow.parquet as pq
 
-    from .scans import _dir_tag
+    from .scans import _dir_tag, build_once
 
     out = os.path.join(
         tempfile.gettempdir(), f"sss_skewfact_{_dir_tag(sf_dir, 'lineitem')}"
     )
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         t = pq.read_table(f"{sf_dir}/lineitem.parquet")
         n = t.num_rows
         k = min(64, max(8, n // 4000))
-        os.makedirs(out, exist_ok=True)
         for i in range(k):
             lo, hi = i * n // k, (i + 1) * n // k
             pq.write_table(t.slice(lo, hi - lo), os.path.join(out, f"{i:04d}.parquet"))
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
-    return out
+
+    return build_once(out, build)
 
 
 def _skew_confs(spark: SparkSession, sf_dir: str) -> dict[str, str]:
@@ -406,18 +406,8 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized eagerly inside the window — AQE reads these confs at
     execution, so a lazily-returned frame would re-plan under restored
     session defaults (the scan_state_store lesson)."""
-    confs = _skew_confs(spark, sf_dir)
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_window(spark, _skew_confs(spark, sf_dir)):
         return skew_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ----------------------------------------------------- binned range join
@@ -583,17 +573,8 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson: a lazily-returned frame would re-plan under restored
     session defaults); tests/test_plans.py pins the injected filter in
     the optimized plan."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    try:
-        for k, v in _BLOOM_CONFS.items():
-            spark.conf.set(k, v)
+    with conf_window(spark, _BLOOM_CONFS):
         return bloom_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------- as-of with tolerance

@@ -8,6 +8,7 @@ from __future__ import annotations
 import functools
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import TABLE_NAMES, load_table, table_path
 from ..registry import query
+from ..session import conf_window
 
 
 def _src_fingerprint(sf_dir: str, *tables: str) -> str:
@@ -222,6 +224,22 @@ def _dir_tag(sf_dir: str, table: str) -> str:
         f"{os.path.basename(os.path.normpath(sf_dir)) or 'sf'}_"
         f"{_src_fingerprint(sf_dir, table)}"
     )
+
+
+def build_once(out: str, build) -> str:
+    """The build-once cache for derived dirs under tmp: unless
+    ``<out>/_DONE`` exists, wipe whatever a crashed attempt left in
+    ``out``, recreate it empty, run ``build()`` to fill it, and only then
+    write the marker — so a dir without the marker is always a partial
+    attempt and never reads back as complete. Returns ``out``. (Layouts
+    that Spark's own writer marks with ``_SUCCESS`` do not need this.)"""
+    marker = os.path.join(out, "_DONE")
+    if not os.path.exists(marker):
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        build()
+        open(marker, "w").close()
+    return out
 
 
 def _text_layout(
@@ -877,28 +895,6 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # that span schema versions, and idempotent partition-level reloads.
 # ---------------------------------------------------------------------------
 
-import contextlib
-
-
-@contextlib.contextmanager
-def _conf_guard(spark: SparkSession, key: str, value: str):
-    """Set a session conf for the duration of a write, restoring the prior
-    value (or unsetting) afterwards — a leaked overwrite mode would
-    silently change every later writer's semantics in this session."""
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 _EVOLVE_SPLIT_MOD = 3  # o_orderkey % 3: rows 0/1 -> v1 drop, row 2 -> v2 drop
 
 
@@ -909,7 +905,8 @@ def evolved_parquet_layout(spark: SparkSession, sf_dir: str) -> str:
     Split is deterministic on the key; content-fingerprint cached."""
     tag = _dir_tag(sf_dir, "orders")
     out = os.path.join(tempfile.gettempdir(), f"sss_evolved_orders_{tag}")
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         o = load_table(spark, sf_dir, "orders")
         v1 = o.filter(F.col("o_orderkey") % _EVOLVE_SPLIT_MOD < 2).select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -919,8 +916,8 @@ def evolved_parquet_layout(spark: SparkSession, sf_dir: str) -> str:
         )
         v1.write.mode("overwrite").parquet(os.path.join(out, "v1"))
         v2.write.mode("overwrite").parquet(os.path.join(out, "v2"))
-        open(os.path.join(out, "_DONE"), "w").write("ok")
-    return out
+
+    return build_once(out, build)
 
 
 @query(
@@ -1008,7 +1005,8 @@ def write_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
     out = dpo_sink_path(sf_dir)
     o = load_table(spark, sf_dir, "orders")
     cents = F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         base = o.select("o_orderkey", cents.alias("cents"), "o_orderstatus")
         base.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
         patch = (
@@ -1019,9 +1017,11 @@ def write_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataF
                 "o_orderstatus",
             )
         )
-        with _conf_guard(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+        dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        with conf_window(spark, dynamic):
             patch.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+
+    build_once(out, build)
     back = spark.read.parquet(out)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1092,7 +1092,8 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     only worth it under severe skew, which listing detects first."""
     frag = fragmented_lineitem_layout(spark, sf_dir)
     out = compact_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         total = sum(
             os.path.getsize(os.path.join(frag, f))
             for f in os.listdir(frag)
@@ -1102,7 +1103,8 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(frag).coalesce(int(n_out)).write.mode(
             "overwrite"
         ).parquet(out)
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+
+    build_once(out, build)
     back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -1239,11 +1241,13 @@ def maintenance_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebalance shuffle moves each byte once, same as the write itself."""
     frag = fragmented_lineitem_layout(spark, sf_dir)
     out = rebalance_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        spark.read.parquet(frag).hint("rebalance", "l_returnflag").write.mode(
-            "overwrite"
-        ).parquet(out)
-        open(os.path.join(out, "_DONE"), "w").write("ok")
+    build_once(
+        out,
+        lambda: spark.read.parquet(frag)
+        .hint("rebalance", "l_returnflag")
+        .write.mode("overwrite")
+        .parquet(out),
+    )
     back = spark.read.parquet(out)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),

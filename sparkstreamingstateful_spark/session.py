@@ -16,6 +16,7 @@ same code runs unchanged from local[32] to a 1000-executor cluster; only
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -59,6 +60,25 @@ def configure(spark: SparkSession) -> SparkSession:
             # A conf may be static on some builds; the factory path covers it.
             pass
     return spark
+
+
+@contextlib.contextmanager
+def conf_window(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body; on exit restore each
+    key's previous value, or unset a key that had none, also when the
+    body raises — a leaked conf would silently change every later query
+    in the session."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

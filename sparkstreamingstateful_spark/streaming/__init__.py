@@ -3,7 +3,7 @@ reference-domain core: event-time windows, watermarks, streaming joins,
 dedup, and per-key mutable state across micro-batches.
 
 Every registered query here *actually executes* a streaming pipeline
-(chunked file feed → ``trigger(availableNow=True)`` → memory sink), so the
+(chunked file feed → ``runner.drive_stream``'s availableNow trigger → sink), so the
 driver's oracle check validates real streaming execution, not a batch
 stand-in. The batch-SQL oracles encode the prefix-consistency guarantee of
 the Structured Streaming model (SIGMOD 2018): a stream fully consumed must

@@ -22,11 +22,16 @@ Variants:
   delivery for dedup tests (at-least-once source simulation).
 * ``late_chunk=i`` holds chunk i back until the end — out-of-order arrival
   for watermark late-drop tests.
+
+Every feed dir is built once per process (memoized by its arguments) and
+deleted when the interpreter exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 import pyarrow as pa
@@ -42,7 +47,7 @@ SENTINEL_DAYS = (30,)
 # batch-id arithmetic (ADVICE r9).
 DEFAULT_CHUNKS = 3
 
-_cache: dict[tuple, str] = {}
+_feeds: dict[tuple, str] = {}
 _max_ts_us: dict[str, int] = {}
 
 
@@ -111,6 +116,41 @@ def _sentinel_table(max_ts_us: int, day_offset: int, idx: int, ts_type) -> pa.Ta
     )
 
 
+def _feed(key: tuple, prefix: str, make_chunks) -> str:
+    """The one feed writer: on a memo miss, write ``make_chunks()`` (the
+    micro-batch tables in delivery order) as ``0000.parquet``, ... with
+    strictly increasing mtimes — the file source processes files in
+    mtime order — into a fresh temp dir that is removed at exit."""
+    hit = _feeds.get(key)
+    if hit and os.path.isdir(hit):
+        return hit
+    out = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, out, True)
+    base = 1_600_000_000
+    for i, chunk in enumerate(make_chunks()):
+        path = os.path.join(out, f"{i:04d}.parquet")
+        pq.write_table(chunk, path)
+        os.utime(path, (base + i, base + i))
+    _feeds[key] = out
+    return out
+
+
+def _slices(table: pa.Table, n_chunks: int) -> list[pa.Table]:
+    """``table`` cut at the ``i * n // n_chunks`` row boundaries."""
+    bounds = [i * table.num_rows // n_chunks for i in range(n_chunks + 1)]
+    return [table.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+
+
+def _sentinels(table: pa.Table) -> list[pa.Table]:
+    """One marker row per ``SENTINEL_DAYS`` entry past ``table``'s max ts."""
+    ts_col = table.column("ts")
+    max_us = _to_us(pa.compute.max(ts_col), ts_col.type)
+    return [
+        _sentinel_table(max_us, days, j, ts_col.type)
+        for j, days in enumerate(SENTINEL_DAYS)
+    ]
+
+
 def chunked_events_dir(
     sf_dir: str,
     n_chunks: int = DEFAULT_CHUNKS,
@@ -120,64 +160,29 @@ def chunked_events_dir(
     late_chunk: int | None = None,
 ) -> str:
     """Build (or reuse) a chunk directory for the given variant."""
-    key = (sf_dir, n_chunks, sentinels, replay, late_chunk)
-    if key in _cache and os.path.isdir(_cache[key]):
-        return _cache[key]
 
-    table = pq.read_table(f"{sf_dir}/events.parquet")
-    n = table.num_rows
-    chunks = []
-    for i in range(n_chunks):
-        lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-        chunks.append(table.slice(lo, hi - lo))
+    def make_chunks() -> list[pa.Table]:
+        table = pq.read_table(f"{sf_dir}/events.parquet")
+        chunks = _slices(table, n_chunks)
+        order = [c for i, c in enumerate(chunks) if i != late_chunk]
+        order += [chunks[i] for i in replay]
+        if late_chunk is not None:
+            # arrives last → late vs the advanced watermark
+            order.append(chunks[late_chunk])
+        return order + (_sentinels(table) if sentinels else [])
 
-    order: list[pa.Table] = []
-    held = None
-    for i, c in enumerate(chunks):
-        if i == late_chunk:
-            held = c
-            continue
-        order.append(c)
-    for i in replay:
-        order.append(chunks[i])
-    if held is not None:
-        order.append(held)  # arrives last → late vs the advanced watermark
-    if sentinels:
-        ts_col = table.column("ts")
-        max_us = _to_us(pa.compute.max(ts_col), ts_col.type)
-        for j, days in enumerate(SENTINEL_DAYS):
-            order.append(_sentinel_table(max_us, days, j, ts_col.type))
-
-    out = tempfile.mkdtemp(prefix="sss_feed_")
-    base = 1_600_000_000
-    for i, c in enumerate(order):
-        path = os.path.join(out, f"{i:04d}.parquet")
-        pq.write_table(c, path)
-        os.utime(path, (base + i, base + i))  # file source processes in mtime order
-    _cache[key] = out
-    return out
+    key = ("events", sf_dir, n_chunks, sentinels, replay, late_chunk)
+    return _feed(key, "sss_feed_", make_chunks)
 
 
 def chunked_table_dir(sf_dir: str, table: str, n_chunks: int = DEFAULT_CHUNKS) -> str:
     """Chunk an arbitrary table into K parquet files (generic micro-batch
     feed for streams without event time — no sentinels needed)."""
-    key = (sf_dir, table, n_chunks)
-    if key in _cache and os.path.isdir(_cache[key]):
-        return _cache[key]
-    t = pq.read_table(f"{sf_dir}/{table}.parquet")
-    n = t.num_rows
-    out = tempfile.mkdtemp(prefix=f"sss_feed_{table}_")
-    base = 1_600_000_000
-    for i in range(n_chunks):
-        lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-        path = os.path.join(out, f"{i:04d}.parquet")
-        pq.write_table(t.slice(lo, hi - lo), path)
-        os.utime(path, (base + i, base + i))
-    _cache[key] = out
-    return out
-
-
-_split_cache: dict[tuple, tuple[str, str]] = {}
+    return _feed(
+        ("table", sf_dir, table, n_chunks),
+        f"sss_feed_{table}_",
+        lambda: _slices(pq.read_table(f"{sf_dir}/{table}.parquet"), n_chunks),
+    )
 
 
 def chunked_events_split_dirs(
@@ -192,32 +197,15 @@ def chunked_events_split_dirs(
     twin of the filter-pushdown stall documented above). Both sentinels
     are built from the FULL table's max event time so the two sources
     advance in lockstep."""
-    key = (sf_dir, n_chunks)
-    hit = _split_cache.get(key)
-    if hit and all(os.path.isdir(p) for p in hit):
-        return hit
 
-    table = pq.read_table(f"{sf_dir}/events.parquet")
-    ts_col = table.column("ts")
-    max_us = _to_us(pa.compute.max(ts_col), ts_col.type)
-    base = 1_600_000_000
-    outs: list[str] = []
-    for parity in (0, 1):
+    def make_chunks(parity: int) -> list[pa.Table]:
+        table = pq.read_table(f"{sf_dir}/events.parquet")
         mask = pa.compute.equal(
             pa.compute.bit_wise_and(table.column("event_id"), 1), parity
         )
-        sub = table.filter(mask)
-        n = sub.num_rows
-        out = tempfile.mkdtemp(prefix=f"sss_feed_p{parity}_")
-        for i in range(n_chunks):
-            lo, hi = i * n // n_chunks, (i + 1) * n // n_chunks
-            path = os.path.join(out, f"{i:04d}.parquet")
-            pq.write_table(sub.slice(lo, hi - lo), path)
-            os.utime(path, (base + i, base + i))
-        for j, days in enumerate(SENTINEL_DAYS):
-            path = os.path.join(out, f"{n_chunks + j:04d}.parquet")
-            pq.write_table(_sentinel_table(max_us, days, j, ts_col.type), path)
-            os.utime(path, (base + n_chunks + j,) * 2)
-        outs.append(out)
-    _split_cache[key] = (outs[0], outs[1])
-    return _split_cache[key]
+        return _slices(table.filter(mask), n_chunks) + _sentinels(table)
+
+    return tuple(
+        _feed(("split", sf_dir, n_chunks, p), f"sss_feed_p{p}_", lambda: make_chunks(p))
+        for p in (0, 1)
+    )

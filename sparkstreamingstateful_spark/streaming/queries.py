@@ -20,15 +20,20 @@ late-drop, which pins the 4-chunk layout its oracle encodes.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_stream_events
 from ..compat import ensure_protobuf_session
+from ..operators.scans import _dir_tag, build_once
 from ..registry import query
+from ..session import conf_window, configure
 from . import feeder, stateful
 from .feeder import chunked_events_dir
-from .runner import run_stream
+from .runner import drive_stream, run_stream
 
 WATERMARK = "10 minutes"
 
@@ -873,6 +878,13 @@ def stream_window_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def topk_sink_path(sf_dir: str) -> str:
+    """Cache location for stream_topk_per_window's output dir."""
+    return os.path.join(
+        tempfile.gettempdir(), f"sss_topk_{_dir_tag(sf_dir, 'events')}"
+    )
+
+
 @query(
     "stream_topk_per_window",
     oracle="""
@@ -896,18 +908,11 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups of a window finalize in the same micro-batch (the one whose
     updated watermark passes the window end), so each batch ranks only
     complete windows. Batches append to a parquet sink (the production
-    shape) which is read back as the result."""
-    import tempfile
-
-    ev = _stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    out_dir = tempfile.mkdtemp(prefix="sss_topk_")
-
+    shape), built once per content tag (``topk_sink_path``), which is
+    read back as the result."""
     from pyspark.sql import Window
+
+    out_dir = topk_sink_path(sf_dir)
 
     def rank_batch(batch_df: DataFrame, batch_id: int) -> None:
         rk = F.row_number().over(
@@ -920,24 +925,18 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    from .runner import require_no_data_batches
-
-    # this key drives its own writeStream (foreachBatch sink), so it owes
-    # the same sentinel-flush guard run_stream applies — without it a
-    # disabled no-data batch would silently drop the final windows
-    require_no_data_batches(spark)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        q = (
-            agg.writeStream.foreachBatch(rank_batch)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    def build():
+        agg = (
+            _stream(spark, sf_dir)
+            .withWatermark("ts", WATERMARK)
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drive_stream(
+            agg, lambda w: w.foreachBatch(rank_batch).outputMode("append").start()
+        )
+
+    build_once(out_dir, build)
     res = spark.read.parquet(out_dir)
     return res.filter(F.col("event_type") != "__sentinel__").select(
         _ntz(F.col("w.start")).alias("win_start"), "event_type", "n", "rk"
@@ -1150,44 +1149,32 @@ def stream_jsonl_sink_path(sf_dir: str) -> str:
     """THE cache location for stream_sink_python_datasource's sink dir —
     single definition, shared with ``sink_cache_paths`` (bench.py wipes
     it so benchmarks time the real stream, never a cached re-read)."""
-    import os
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-
     return os.path.join(
-        _tf.gettempdir(), f"sss_jsonlsink_stream_{_dir_tag(sf_dir, 'events')}"
+        tempfile.gettempdir(), f"sss_jsonlsink_stream_{_dir_tag(sf_dir, 'events')}"
     )
 
 
 def totable_sink_cache(sf_dir: str) -> tuple[str, str]:
     """(table name, data path) for stream_sink_to_table — single
     definition for the query, tests, and ``sink_cache_paths``."""
-    import os
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-
     tag = _dir_tag(sf_dir, "events").replace(".", "_")  # dots would parse
     # as a schema qualifier in the table name
-    return f"sss_totable_{tag}", os.path.join(_tf.gettempdir(), f"sss_totable_{tag}")
+    return f"sss_totable_{tag}", os.path.join(
+        tempfile.gettempdir(), f"sss_totable_{tag}"
+    )
 
 
 def foreach_sink_path(sf_dir: str) -> str:
     """Cache location for stream_sink_foreach's output dir."""
-    import os
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-
     return os.path.join(
-        _tf.gettempdir(), f"sss_foreachsink_{_dir_tag(sf_dir, 'events')}"
+        tempfile.gettempdir(), f"sss_foreachsink_{_dir_tag(sf_dir, 'events')}"
     )
 
 
 def sink_cache_paths(sf_dir: str) -> list[str]:
     """Every completion-marker-cached sink directory for ``sf_dir``.
-    The markers (_DONE / _SUCCESS) exist so the correctness gate — which
+    The markers (``build_once``'s / Spark's ``_SUCCESS``) exist so the
+    correctness gate — which
     executes each key's plan more than once per session — doesn't redo
     expensive stream runs; a BENCHMARK timing a marker-cached key would
     measure a no-op re-read instead of the sink (the exact weakness
@@ -1202,6 +1189,7 @@ def sink_cache_paths(sf_dir: str) -> list[str]:
     return [
         jsonl_sink_path(sf_dir),
         stream_jsonl_sink_path(sf_dir),
+        topk_sink_path(sf_dir),
         totable_sink_cache(sf_dir)[1],
         foreach_sink_path(sf_dir),
         dpo_sink_path(sf_dir),
@@ -1231,38 +1219,33 @@ def stream_sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame
     the H-check proves per-batch promotion delivered every row exactly
     once. ``ts`` stays out of the projection — the JSONL sink documents
     itself as long/double/string-only (datetimes have no JSON form)."""
-    import os
-    import shutil
-
     from ..sources import pyds
 
     pyds.register(spark)
     out = stream_jsonl_sink_path(sf_dir)
-    # Skip-rerun keys on _DONE, written only after awaitTermination —
-    # NOT on _COMMITTED, which exists from the FIRST micro-batch commit:
-    # an interrupted run would otherwise read back as complete forever
-    # (a rerun's fresh checkpoint restarts batchIds at 0, colliding with
-    # the partial _COMMITTED log and getting discarded as replays, so it
-    # could never self-heal — ADVICE r6). A dir without _DONE is a
-    # partial attempt: wipe it (including _COMMITTED) so the rerun's
-    # batch 0 promotes cleanly.
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        if os.path.isdir(out):
-            shutil.rmtree(out)
+
+    # Skip-rerun keys on build_once's marker, written only after the
+    # stream ends — NOT on _COMMITTED, which exists from the FIRST
+    # micro-batch commit: an interrupted run would otherwise read back as
+    # complete forever (a rerun's fresh checkpoint restarts batchIds at 0,
+    # colliding with the partial _COMMITTED log and getting discarded as
+    # replays, so it could never self-heal — ADVICE r6). build_once wipes
+    # a partial attempt (including _COMMITTED) so the rerun's batch 0
+    # promotes cleanly.
+    def build():
         feed = chunked_events_dir(sf_dir, sentinels=False)
         ev = read_stream_events(spark, feed).select(
             "event_id", "user_id", "event_type", "value"
         )
-        q = (
-            ev.writeStream.format("sss_jsonl")
+        drive_stream(
+            ev,
+            lambda w: w.format("sss_jsonl")
             .option("path", out)
             .option("checkpointLocation", os.path.join(out, "_checkpoint"))
-            .trigger(availableNow=True)
-            .start()
+            .start(),
         )
-        q.awaitTermination()
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+
+    build_once(out, build)
     back = spark.read.schema(
         "event_id long, user_id long, event_type string, value double"
     ).json(out)
@@ -1285,40 +1268,34 @@ def stream_sink_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ST20a): purchases streamed into a table created BY the streaming
     writer itself and read back through ``spark.table`` (the catalog
     surface, not a path read). The table is external (data under tmp,
-    same ``_dir_tag`` content-fingerprint cache discipline as the other
-    derived layouts) so the sink never writes into an arbitrary CWD's
-    spark-warehouse. Completion follows the jsonl sink's ``_DONE``
-    contract: the marker is written only after ``awaitTermination``, a
-    dir without it is a partial attempt and is wiped (table dropped)
-    so the rerun's fresh checkpoint promotes cleanly; a complete dir
-    from an EARLIER session re-registers the external table instead of
+    keyed by ``_dir_tag`` like the other derived layouts) so the sink
+    never writes into an arbitrary CWD's spark-warehouse. The data dir is
+    built through ``build_once``, like the jsonl sink: a dir without the
+    marker is a partial attempt and is wiped (table dropped) so the
+    rerun's fresh checkpoint promotes cleanly; a complete dir from an
+    EARLIER session re-registers the external table instead of
     re-running the stream. H-check proves the file-sink transaction log
     (_spark_metadata) + catalog round-trip delivered every purchase
     exactly once."""
-    import os
-    import shutil
-
     name, out = totable_sink_cache(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
+
+    def build():
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        if os.path.isdir(out):
-            shutil.rmtree(out)
         feed = chunked_events_dir(sf_dir, sentinels=False)
         ev = (
             read_stream_events(spark, feed)
             .filter(F.col("event_type") == "purchase")
             .select("event_id", "user_id", "value")
         )
-        q = (
-            ev.writeStream.option("path", out)
+        drive_stream(
+            ev,
+            lambda w: w.option("path", out)
             .option("checkpointLocation", os.path.join(out, "_checkpoint"))
-            .trigger(availableNow=True)
-            .toTable(name)
+            .toTable(name),
         )
-        q.awaitTermination()
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
-    elif not spark.catalog.tableExists(name):
+
+    build_once(out, build)
+    if not spark.catalog.tableExists(name):
         # complete data dir cached from an earlier session — re-attach
         spark.sql(
             f"CREATE TABLE {name} (event_id BIGINT, user_id BIGINT, "
@@ -1407,21 +1384,13 @@ def stream_sink_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
     shapes around that. Window starts are formatted to strings JVM-side
     (one codegen'd date_format, no Python datetime/tz handling in the
     writer). The sentinel drives watermark finalization (feeder.py) and
-    is filtered from the READ-BACK batch, never in-plan; the `_DONE`
-    completion contract matches the jsonl sink. H-check proves the
-    per-(epoch, partition) promotion delivered every finalized window
+    is filtered from the READ-BACK batch, never in-plan; the output dir
+    is built through ``build_once``, like the jsonl sink. H-check proves
+    the per-(epoch, partition) promotion delivered every finalized window
     exactly once."""
-    import os
-    import shutil
-
-    from .runner import require_no_data_batches
-
-    require_no_data_batches(spark)
     out = foreach_sink_path(sf_dir)
-    if not os.path.exists(os.path.join(out, "_DONE")):
-        if os.path.isdir(out):
-            shutil.rmtree(out)
-        os.makedirs(out)
+
+    def build():
         ev = _stream(spark, sf_dir)  # sentinels=True
         agg = (
             ev.withWatermark("ts", WATERMARK)
@@ -1436,24 +1405,10 @@ def stream_sink_foreach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_v_raw",
             )
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                agg.writeStream.foreach(
-                    JsonlForeachWriter(
-                        out, ["win_start", "event_type", "n", "sum_v_raw"]
-                    )
-                )
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with open(os.path.join(out, "_DONE"), "w") as f:
-            f.write("")
+        writer = JsonlForeachWriter(out, ["win_start", "event_type", "n", "sum_v_raw"])
+        drive_stream(agg, lambda w: w.foreach(writer).outputMode("append").start())
+
+    build_once(out, build)
     back = spark.read.schema(
         "win_start string, event_type string, n long, sum_v_raw double"
     ).json(out)
@@ -1474,8 +1429,8 @@ def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     state read back as a BATCH DataFrame — the operational surface for
     inspecting/repairing/auditing live streaming state without touching
     the query that owns it. Setup runs a keyed ``dropDuplicates`` stream
-    over the events feed to completion (checkpoint cached per content
-    fingerprint, same ``_DONE`` discipline as the derived layouts — the
+    over the events feed to completion (checkpoint built once per content
+    fingerprint through ``build_once``, like the derived layouts — the
     READ is the operator under test, the stream is setup, so benches may
     reuse it); the read then loads ``format("statestore")`` on that
     checkpoint and projects the state keys. The H-check pins the reader
@@ -1517,12 +1472,46 @@ def scan_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CHANGELOG = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+
+
+def _state_ckpt(spark: SparkSession, sf_dir: str, prefix: str, stream, **drive) -> str:
+    """Build (or reuse) the completed checkpoint of ``stream()`` run into
+    a noop sink — the setup the ``scan_state_*`` readers read back.
+    Cached through ``build_once`` at ``<tmp>/{prefix}{provider}_{tag}``:
+    state files are provider-physical, so the cache is keyed by the
+    session's state-store provider as well as content (see
+    scan_state_store). The session is configured FIRST so the tag
+    reflects the provider the setup stream will actually run with (a
+    plain driver session is configured lazily by load_table — if this
+    key runs before any table load, an unconfigured conf.get here would
+    mis-tag the cache dir). ``drive`` goes to ``drive_stream``."""
+    configure(spark)
+    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
+    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
+    ckpt = os.path.join(
+        tempfile.gettempdir(), f"{prefix}{ptag}_{_dir_tag(sf_dir, 'events')}"
+    )
+
+    def build():
+        drive_stream(
+            stream(),
+            lambda w: w.format("noop")
+            .outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .start(),
+            **drive,
+        )
+
+    return build_once(ckpt, build)
+
+
 def _dedup_state_ckpt(
     spark: SparkSession, sf_dir: str, *, changelog: bool = False
 ) -> str:
     """Build (or reuse) a completed keyed-dropDuplicates checkpoint for
     the state-store reader keys — cached per (provider, changelog mode,
-    content tag) with the ``_DONE`` discipline. Two physical flavors
+    content tag) by ``_state_ckpt``. Two physical flavors
     exist because the two read paths need OPPOSITE RocksDB layouts:
     the SNAPSHOT read (S7) wants changelog checkpointing OFF
     (snapshot-per-version — a changelog-only version forces the reader
@@ -1531,57 +1520,15 @@ def _dedup_state_ckpt(
     RocksDB replays the per-batch ``.changelog`` files themselves, and a
     snapshot-only checkpoint has none (measured:
     CANNOT_READ_STREAMING_STATE_FILE .../1.changelog does not exist)."""
-    import os
-    import shutil
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    # Self-configure FIRST: the provider tag must reflect the provider the
-    # setup stream will actually run with (a plain driver session is
-    # configured lazily by load_table — if this key runs before any table
-    # load, an unconfigured conf.get here would mis-tag the cache dir).
-    configure(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    flavor = "cf_" if changelog else ""
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statestore_{flavor}{ptag}_{_dir_tag(sf_dir, 'events')}",
+    return _state_ckpt(
+        spark,
+        sf_dir,
+        "sss_statestore_cf_" if changelog else "sss_statestore_",
+        lambda: read_stream_events(spark, chunked_events_dir(sf_dir, sentinels=False))
+        .select("event_id")
+        .dropDuplicates(["event_id"]),
+        confs={_CHANGELOG: "true" if changelog else "false"},
     )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
-        feed = chunked_events_dir(sf_dir, sentinels=False)
-        dedup = (
-            read_stream_events(spark, feed)
-            .select("event_id")
-            .dropDuplicates(["event_id"])
-        )
-        cl_key = (
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_cl = spark.conf.get(cl_key, "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        spark.conf.set(cl_key, "true" if changelog else "false")
-        try:
-            q = (
-                dedup.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(cl_key, prev_cl)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
-    return ckpt
 
 
 def _statestore_read(spark: SparkSession, ckpt: str, project, **options) -> DataFrame:
@@ -1591,15 +1538,11 @@ def _statestore_read(spark: SparkSession, ckpt: str, project, **options) -> Data
     EAGERLY materialize via localCheckpoint so the scan executes while the
     conf still holds."""
     lag_key = "spark.sql.streaming.stateStore.coordinatorReportSnapshotUploadLag"
-    prev_lag = spark.conf.get(lag_key, "true")
-    spark.conf.set(lag_key, "false")
-    try:
+    with conf_window(spark, {lag_key: "false"}):
         rd = spark.read.format("statestore").option("path", ckpt)
         for k, v in options.items():
             rd = rd.option(k, v)
         return project(rd.load()).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set(lag_key, prev_lag)
 
 
 # The S7b/S7c oracles predict per-batch state attribution from the feeder's
@@ -1728,23 +1671,8 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     setup is the anti-pattern at 100 TB (state = full history — exactly
     what this reader lets an operator catch); the read itself is one
     partition-parallel scan per side of one state version."""
-    import os
-    import shutil
-    import tempfile as _tf
 
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    configure(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statejoin_{ptag}_{_dir_tag(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
+    def joined():
         feed = chunked_events_dir(sf_dir, sentinels=False)
         stream = read_stream_events(spark, feed)
         purchases = stream.filter(F.col("event_type") == "purchase").select(
@@ -1755,24 +1683,9 @@ def scan_state_join_side(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_id").alias("click_id"),
             F.col("user_id").alias("c_user"),
         )
-        joined = purchases.join(
-            clicks, F.col("p_user") == F.col("c_user")
-        )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            q = (
-                joined.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
+        return purchases.join(clicks, F.col("p_user") == F.col("c_user"))
+
+    ckpt = _state_ckpt(spark, sf_dir, "sss_statejoin_", joined)
     left = _statestore_read(
         spark,
         ckpt,
@@ -1841,33 +1754,18 @@ def scan_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) a completed ``transformWithStateInPandas``
     sessionization checkpoint for the TWS state-variable reader (S7f)
-    — the ST16 pipeline run against a FIXED checkpoint with the
-    ``_DONE`` discipline, cached per (provider, content tag) like
+    — the ST16 pipeline run against a FIXED checkpoint, cached per
+    (provider, content tag) by ``_state_ckpt`` like
     _dedup_state_ckpt. Changelog checkpointing is pinned OFF for this
     checkpoint: the reader takes the snapshot path (a changelog-only
     version forces coordinator-RPC replay a batch session lacks; see
     scan_state_store)."""
-    import os
-    import shutil
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    configure(spark)
     ensure_protobuf_session(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statestore_tws_{ptag}_{_dir_tag(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
-        ev = _stream(spark, sf_dir)
-        sess = (
-            ev.withWatermark("ts", WATERMARK)
+
+    def sessions():
+        return (
+            _stream(spark, sf_dir)
+            .withWatermark("ts", WATERMARK)
             .groupBy("user_id")
             .transformWithStateInPandas(
                 stateful.make_sessionize_processor(),
@@ -1876,34 +1774,15 @@ def _sessionize_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
                 timeMode="EventTime",
             )
         )
-        cl_key = (
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        )
-        from .runner import require_no_data_batches
 
-        # sentinel-fed stream driving its own writeStream: owes the
-        # no-data-batch guard (final timer expiry rides the flush batch)
-        require_no_data_batches(spark)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_cl = spark.conf.get(cl_key, "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_parts(sf_dir)))
-        spark.conf.set(cl_key, "false")
-        try:
-            q = (
-                sess.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(cl_key, prev_cl)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
-    return ckpt
+    return _state_ckpt(
+        spark,
+        sf_dir,
+        "sss_statestore_tws_",
+        sessions,
+        state_partitions=_parts(sf_dir),
+        confs={_CHANGELOG: "false"},
+    )
 
 
 @query(
@@ -2039,30 +1918,15 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
     holds (a) its complete ``event_type → (n, sum)`` map and (b) one
     live registered timer at the fixed deadline — BOTH read-back
     surfaces (S7g map variables, S7h timers) deterministic by
-    construction. Cached per (provider, content tag) with the ``_DONE``
-    discipline; changelog checkpointing pinned OFF (the batch reader
+    construction. Cached per (provider, content tag) by
+    ``_state_ckpt``; changelog checkpointing pinned OFF (the batch reader
     takes the snapshot path — see scan_state_store)."""
-    import os
-    import shutil
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-    from ..session import configure
-
-    configure(spark)
     ensure_protobuf_session(spark)
-    prov = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    ptag = "rocksdb" if "RocksDB" in str(prov) else "hdfs"
-    ckpt = os.path.join(
-        _tf.gettempdir(),
-        f"sss_statestore_twsmap_{ptag}_{_dir_tag(sf_dir, 'events')}",
-    )
-    if not os.path.exists(os.path.join(ckpt, "_DONE")):
-        if os.path.isdir(ckpt):
-            shutil.rmtree(ckpt)
-        ev = _stream(spark, sf_dir)
-        prof = (
-            ev.withWatermark("ts", WATERMARK)
+
+    def profiles():
+        return (
+            _stream(spark, sf_dir)
+            .withWatermark("ts", WATERMARK)
             .groupBy("user_id")
             .transformWithStateInPandas(
                 stateful.make_profile_processor(_profile_never_ms(sf_dir)),
@@ -2071,32 +1935,15 @@ def _profile_tws_ckpt(spark: SparkSession, sf_dir: str) -> str:
                 timeMode="EventTime",
             )
         )
-        cl_key = (
-            "spark.sql.streaming.stateStore.rocksdb"
-            ".changelogCheckpointing.enabled"
-        )
-        from .runner import require_no_data_batches
 
-        require_no_data_batches(spark)
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_cl = spark.conf.get(cl_key, "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_parts(sf_dir)))
-        spark.conf.set(cl_key, "false")
-        try:
-            q = (
-                prof.writeStream.format("noop")
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(cl_key, prev_cl)
-        with open(os.path.join(ckpt, "_DONE"), "w") as f:
-            f.write("")
-    return ckpt
+    return _state_ckpt(
+        spark,
+        sf_dir,
+        "sss_statestore_twsmap_",
+        profiles,
+        state_partitions=_parts(sf_dir),
+        confs={_CHANGELOG: "false"},
+    )
 
 
 @query(
@@ -2318,13 +2165,8 @@ def stateful_running_agg_tws_bootstrap(
 
 def merge_table_path(sf_dir: str) -> str:
     """Cache location for stream_merge_to_table's versioned table root."""
-    import os
-    import tempfile as _tf
-
-    from ..operators.scans import _dir_tag
-
     return os.path.join(
-        _tf.gettempdir(), f"sss_mergetable_{_dir_tag(sf_dir, 'events')}"
+        tempfile.gettempdir(), f"sss_mergetable_{_dir_tag(sf_dir, 'events')}"
     )
 
 
@@ -2445,29 +2287,17 @@ def stream_merge_to_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     shard the target by key range so each batch rewrites only touched
     shards, or use a merge-on-read format; the epoch-log idempotence
     and the latest-wins algebra carry over unchanged)."""
-    import os
-    import shutil
-
-    from .runner import require_no_data_batches
-
-    require_no_data_batches(spark)
     root = merge_table_path(sf_dir)
-    if not os.path.exists(os.path.join(root, "_DONE")):
-        if os.path.isdir(root):
-            shutil.rmtree(root)
-        os.makedirs(root)
 
-        ev = _stream(spark, sf_dir, sentinels=False)
-        q = (
-            ev.writeStream.foreachBatch(
+    def build():
+        drive_stream(
+            _stream(spark, sf_dir, sentinels=False),
+            lambda w: w.foreachBatch(
                 lambda batch, epoch_id: merge_epoch(root, batch, epoch_id)
-            )
-            .trigger(availableNow=True)
-            .start()
+            ).start(),
         )
-        q.awaitTermination()
-        with open(os.path.join(root, "_DONE"), "w") as f:
-            f.write("")
+
+    build_once(root, build)
     committed = _merge_committed_epochs(root)
     final = spark.read.schema(_MERGE_TABLE_SCHEMA).parquet(
         os.path.join(root, f"v{max(committed):05d}")

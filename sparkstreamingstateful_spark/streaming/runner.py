@@ -1,12 +1,12 @@
-"""Streaming-query runner: execute a streaming DataFrame to completion
-(``availableNow`` trigger) into a memory sink and hand back the materialized
-result table.
+"""Streaming-query runner: the one place a streaming DataFrame is run to
+its end (``availableNow`` trigger, see :func:`drive_stream`), plus the
+memory-sink form that hands back the materialized result table.
 
 The memory sink is the test/driver surface; production sinks (foreachBatch →
 parquet with exactly-once via checkpoint, console) are exercised in
 tests/test_streaming.py (S5, ST11).
 
-Neither runner sets ``checkpointLocation``: for a memory sink Spark
+Neither memory-sink runner sets ``checkpointLocation``: Spark then
 creates a temporary checkpoint and deletes it when the query stops
 cleanly, so a run leaves no checkpoint dir behind.
 """
@@ -17,7 +17,9 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-# Progress snapshots of the most recent run_stream() execution (list of
+from ..session import conf_window
+
+# Progress snapshots of the most recent drive_stream() execution (list of
 # per-micro-batch progress dicts, driver-side metadata only — a few KB).
 # Tests read state-operator metrics from here (e.g. asserting
 # dropDuplicatesWithinWatermark actually EVICTS state rows) without the
@@ -32,9 +34,7 @@ def require_no_data_batches(spark) -> None:
     can't silently turn sentinel feeds into never-emitting streams.
     Explicit raise (not assert — stripped under python -O) and
     case-insensitive (Spark parses boolean confs case-insensitively).
-    Every sentinel-fed streaming execution must call this — including
-    queries that drive their own writeStream instead of run_stream
-    (stream_topk_per_window's foreachBatch pipeline)."""
+    drive_stream calls it for every availableNow execution."""
     no_data = spark.conf.get(
         "spark.sql.streaming.noDataMicroBatches.enabled", "true"
     )
@@ -71,9 +71,7 @@ def run_stream_drain(
 
     spark = df.sparkSession
     name = "sss_mem_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with conf_window(spark, {"spark.sql.shuffle.partitions": str(state_partitions)}):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -114,42 +112,54 @@ def run_stream_drain(
         q.awaitTermination()
         global LAST_QUERY_PROGRESS
         LAST_QUERY_PROGRESS = [dict(pr) for pr in (q.recentProgress or [])]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
+
+
+def drive_stream(
+    df: DataFrame,
+    start,
+    *,
+    state_partitions: int = 4,
+    confs: dict[str, str] | None = None,
+) -> None:
+    """Run a streaming DataFrame to its end: the only availableNow entry point.
+
+    Checks the no-data-batch guard, opens a conf window with
+    ``spark.sql.shuffle.partitions=state_partitions`` plus ``confs``
+    (read at query start; the partition count is then pinned in the
+    checkpoint), hands
+    ``start`` the ``availableNow`` writer to name and start the sink
+    (``lambda w: w.format("noop")....start()``), waits for the query to
+    finish and records its progress in ``LAST_QUERY_PROGRESS``.
+
+    ``state_partitions`` caps the stateful-operator partition count.
+    Stateful micro-batches pay a Python-worker/state-store round-trip per
+    partition per batch, so the right count tracks rows-per-batch: small
+    feeds want few, fuller partitions (fixed cost dominates), large feeds
+    want more (real work dominates) — registered queries size it via
+    ``queries._parts`` (r4 sweep in its docstring). A production
+    deployment with real key cardinality would pin O(cores) once for the
+    checkpoint's lifetime.
+    """
+    spark = df.sparkSession
+    require_no_data_batches(spark)
+    window = {"spark.sql.shuffle.partitions": str(state_partitions), **(confs or {})}
+    with conf_window(spark, window):
+        q = start(df.writeStream.trigger(availableNow=True))
+        q.awaitTermination()
+    global LAST_QUERY_PROGRESS
+    LAST_QUERY_PROGRESS = [dict(p) for p in (q.recentProgress or [])]
 
 
 def run_stream(
     df: DataFrame, *, output_mode: str = "append", state_partitions: int = 4
 ) -> DataFrame:
-    """Run a streaming DataFrame to completion; return the memory table.
-
-    ``state_partitions`` caps the stateful-operator partition count for
-    this query (picked up from the session conf at query start and then
-    pinned in the checkpoint). Stateful micro-batches pay a
-    Python-worker/state-store round-trip per partition per batch, so the
-    right count tracks rows-per-batch: small feeds want few, fuller
-    partitions (fixed cost dominates), large feeds want more (real work
-    dominates) — registered queries size it via ``queries._parts`` (r4
-    sweep in its docstring). A production deployment with real key
-    cardinality would pin O(cores) once for the checkpoint's lifetime.
-    """
-    spark = df.sparkSession
-    require_no_data_batches(spark)
+    """Run a streaming DataFrame to completion into a memory sink; return
+    the memory table (see :func:`drive_stream` for ``state_partitions``)."""
     name = "sss_mem_" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        global LAST_QUERY_PROGRESS
-        LAST_QUERY_PROGRESS = [dict(p) for p in (q.recentProgress or [])]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+    drive_stream(
+        df,
+        lambda w: w.format("memory").queryName(name).outputMode(output_mode).start(),
+        state_partitions=state_partitions,
+    )
+    return df.sparkSession.table(name)

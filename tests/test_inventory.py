@@ -274,3 +274,28 @@ def test_driver_window_is_r19_rotation():
         "udtf_table_arg",
     ]
     assert list(QUERIES)[:50] == expected
+
+
+def test_streams_run_only_in_runner_and_build_once():
+    """Source inventory: only ``streaming/runner.py`` starts an
+    availableNow stream or waits on one, and only ``scans.build_once``
+    names the ``_DONE`` completion marker — a hand-rolled copy elsewhere
+    would drift from the one policy (no-data guard, conf window, wipe
+    then build then mark)."""
+    import inspect
+    import pathlib
+
+    from sparkstreamingstateful_spark.operators import scans
+
+    pkg = pathlib.Path(registry.__file__).parent
+    runner = pkg / "streaming" / "runner.py"
+    outside, markers = [], 0
+    for path in sorted(pkg.rglob("*.py")):
+        src = path.read_text()
+        if path != runner and (
+            "trigger(availableNow=True)" in src or "awaitTermination(" in src
+        ):
+            outside.append(str(path.relative_to(pkg)))
+        markers += src.count('"_DONE"')
+    assert not outside, f"streams run outside streaming/runner.py: {outside}"
+    assert markers == inspect.getsource(scans.build_once).count('"_DONE"') == 1

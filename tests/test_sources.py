@@ -162,6 +162,39 @@ def test_split_feed_dirs_disjoint_union_with_sentinels():
     assert feeder.chunked_events_split_dirs(SF001) == (d_even, d_odd)
 
 
+def test_feed_dirs_removed_at_exit(tmp_path):
+    """Every feeder dir (events, table and split feeds) is deleted when
+    the process that built it exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import os\n"
+        "from sparkstreamingstateful_spark.streaming import feeder\n"
+        f"dirs = [feeder.chunked_events_dir({SF001!r}),\n"
+        f"        feeder.chunked_table_dir({SF001!r}, 'documents'),\n"
+        f"        *feeder.chunked_events_split_dirs({SF001!r})]\n"
+        "for d in dirs:\n"
+        "    print(d, len(os.listdir(d)))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    run = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    built = [line.split() for line in run.stdout.splitlines()]
+    assert len(built) == 4
+    for d, n_files in built:
+        assert d.startswith(str(tmp_path)) and int(n_files) > 0
+        assert not os.path.exists(d), f"feed dir {d} outlived its process"
+    assert not list(tmp_path.glob("sss_feed_*"))
+
+
 def test_xml_roundtrip_special_chars(spark, tmp_path):
     """S6j contract beyond the oracle's real data: XML entity escaping
     (& < > " ') and empty strings must survive write→read bit-exactly,
@@ -258,7 +291,7 @@ def test_partition_overwrite_mode_contrast(spark, tmp_path):
     TRUNCATES every other partition first — the failure mode dynamic
     mode exists to prevent. Pinned on a tiny frame so the semantics, not
     the data, are the subject."""
-    from sparkstreamingstateful_spark.operators.scans import _conf_guard
+    from sparkstreamingstateful_spark.session import conf_window
 
     out = str(tmp_path / "dpo_contrast")
     base = spark.createDataFrame(
@@ -267,15 +300,34 @@ def test_partition_overwrite_mode_contrast(spark, tmp_path):
     base.write.mode("overwrite").partitionBy("p").parquet(out)
     patch = spark.createDataFrame([(99, "a")], "v int, p string")
 
-    with _conf_guard(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
+    with conf_window(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("p").parquet(out)
     got = {(r.v, r.p) for r in spark.read.parquet(out).collect()}
     assert got == {(99, "a"), (2, "b"), (3, "c")}, got
 
-    with _conf_guard(spark, "spark.sql.sources.partitionOverwriteMode", "static"):
+    with conf_window(spark, {"spark.sql.sources.partitionOverwriteMode": "static"}):
         patch.write.mode("overwrite").partitionBy("p").parquet(out)
     got = {(r.v, r.p) for r in spark.read.parquet(out).collect()}
     assert got == {(99, "a")}, got  # static truncated b and c
+
+
+def test_conf_window_restores_after_raise(spark):
+    """session.conf_window restores a key that was set to its old value
+    and unsets a key that had none — also when the body raises."""
+    from sparkstreamingstateful_spark.session import conf_window
+
+    was_set = "spark.sss.test.confWindow"
+    was_unset = "spark.sql.sources.partitionOverwriteMode"  # has a default
+    spark.conf.set(was_set, "before")
+    spark.conf.unset(was_unset)
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_window(spark, {was_set: "inside", was_unset: "dynamic"}):
+            assert spark.conf.get(was_set) == "inside"
+            assert spark.conf.get(was_unset) == "dynamic"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(was_set) == "before"
+    assert spark.conf.get(was_unset, None) is None
+    spark.conf.unset(was_set)
 
 
 def test_compaction_reduces_files(spark):

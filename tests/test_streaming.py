@@ -1229,11 +1229,12 @@ def test_statestore_changefeed_and_snapshot(spark, tmp_path):
 
 
 def test_sink_dirs_self_heal_partial(spark, duck):
-    """The _DONE completion contract on the r8 sinks: a sink dir WITHOUT
-    the marker is a partial attempt — the key must wipe and rebuild it
-    (foreach: garbage part-files from the failed attempt must not leak
-    into the read-back; toTable: the catalog table must be dropped and
-    recreated), and the rebuilt result must still match the oracle."""
+    """The build_once completion contract on the sinks: a sink dir
+    WITHOUT the marker is a partial attempt — the key must wipe and
+    rebuild it (foreach/topk: garbage part-files from the failed attempt
+    must not leak into the read-back; toTable: the catalog table must be
+    dropped and recreated), and the rebuilt result must still match the
+    oracle."""
     import shutil
 
     from sparkstreamingstateful_spark.streaming import queries as sq
@@ -1255,6 +1256,20 @@ def test_sink_dirs_self_heal_partial(spark, duck):
     )
     assert os.path.exists(os.path.join(out, "_DONE"))
     assert not os.path.exists(os.path.join(out, "e99999-p00000.jsonl"))
+    # topk: same fake crash in the foreachBatch parquet sink
+    out = sq.topk_sink_path(SF_UNIT)
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    with open(os.path.join(out, "part-99999-dead.parquet"), "w") as f:
+        f.write("garbage from a dead attempt")
+    compare(
+        QUERIES["stream_topk_per_window"](spark, SF_UNIT),
+        duck,
+        oracles["stream_topk_per_window"],
+        name="topk_self_heal",
+    )
+    assert os.path.exists(os.path.join(out, "_DONE"))
+    assert not os.path.exists(os.path.join(out, "part-99999-dead.parquet"))
     # toTable: completed data dir whose marker vanished → full rebuild
     name, tout = sq.totable_sink_cache(SF_UNIT)
     QUERIES["stream_sink_to_table"](spark, SF_UNIT).count()  # ensure built
